@@ -8,11 +8,14 @@ ComputeSteps (`algo/.../impl/pagerank/ComputeSteps.java`).
 Two layouts, one block-store design:
 
 * **push (CSR)** — edges hash-partitioned by ``src``; per block arrays
-  (src_ids, indptr, w_norm, dst_uniq, dst_code). Per superstep each block
-  scatters rank(u)·w_norm into a local bincount (map-side combine) and the
-  gather is ``groupBy(dst).agg(sum)`` — at most B partial rows per target,
-  so high-in-degree skew cannot unbalance the shuffle. Scales to rank
-  vectors far beyond single-machine memory.
+  (src_ids, indptr, w_norm, dst_uniq, dst_code). A superstep is one
+  exchange (``push_superstep``): each scatter task pushes its (id, rank)
+  rows through their blocks (bincount = map-side combine, merged per
+  task), one ``repartition(pmod(dst, B))`` carries the partials plus the
+  old ranks, and the gather task sums per target and applies the rank
+  update — at most one partial row per (task, target), so high-in-degree
+  skew cannot unbalance the shuffle. Scales to rank vectors far beyond
+  single-machine memory.
 * **pull (CSC)** — edges partitioned by ``pmod(dst, B)``; per block
   (src, slice_pos, w_norm) with slice_pos indexing np.arange(part, n, B).
   Per superstep the driver broadcasts the rank vector and each block
@@ -40,6 +43,7 @@ object storage per host).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from collections.abc import Iterator
@@ -48,8 +52,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-
-RANK_BLOCK_SCHEMA = "part int, ids binary, vals binary"
 
 # tiny per-process handle cache; actual data pages are shared via OS page cache
 _MMAP_CACHE: dict[tuple, dict] = {}
@@ -226,31 +228,32 @@ class pinned_store:
 _FINGERPRINT_STAT_CAP = 1024
 
 
-def _input_files_fingerprint(edges: DataFrame) -> int:
-    """Content signature of the plan's file inputs: a hash over the sorted
-    input-file paths plus (size, mtime_ns) for up to _FINGERPRINT_STAT_CAP
-    local files. Overwriting a parquet file beneath a semantically identical
-    plan changes this signature, so the store cache rebuilds instead of
-    serving stale CSR/CSC blocks (r5 verdict). Driver-side listing only —
-    the scan's FileIndex has already listed these paths, no Spark job. Past
-    the cap (or for non-local URIs) the path list alone still catches
-    adds/removes/renames; plans with no file inputs hash to a constant,
-    which is exactly the pre-r6 semantics."""
+def _input_files_fingerprint(edges: DataFrame) -> str:
+    """Content signature of the plan's file inputs: a SHA-256 over the
+    sorted input-file paths plus (size, mtime_ns) for up to
+    _FINGERPRINT_STAT_CAP local files. Overwriting a parquet file beneath a
+    semantically identical plan — even in place, at the same path — changes
+    this signature, so the store cache rebuilds instead of serving stale
+    CSR/CSC blocks. A hashlib digest, not the builtin ``hash()``, so the
+    key is the same in every process. Driver-side listing only — the scan's
+    FileIndex has already listed these paths, no Spark job. Past the cap
+    (or for non-local URIs) the path list alone still catches
+    adds/removes/renames; plans with no file inputs get a constant."""
     try:
         files = sorted(edges.inputFiles())
     except Exception:
-        return 0
-    sig: list = []
+        return ""
+    h = hashlib.sha256()
     for i, f in enumerate(files):
+        line = f
         if i < _FINGERPRINT_STAT_CAP and f.startswith("file:"):
             try:
                 st = os.stat(f[len("file:"):])
-                sig.append((f, st.st_size, st.st_mtime_ns))
-                continue
+                line = f"{f}\0{st.st_size}\0{st.st_mtime_ns}"
             except OSError:
                 pass
-        sig.append((f,))
-    return hash(tuple(sig))
+        h.update(line.encode() + b"\n")
+    return h.hexdigest()
 
 
 def semantic_store_key(edges: DataFrame, *extra) -> tuple | None:
@@ -390,133 +393,30 @@ def write_edge_blocks(
     _finalize_store(manifest, path, num_blocks, meta)
 
 
-def _pack_rank_block(pdf: pd.DataFrame) -> pd.DataFrame:
-    part = int(pdf["part"].iloc[0])
-    ids = pdf["id"].to_numpy(np.int64)
-    vals = pdf["val"].to_numpy(np.float64)
-    order = np.argsort(ids, kind="stable")
-    return pd.DataFrame(
-        {"part": [part], "ids": [ids[order].tobytes()], "vals": [vals[order].tobytes()]}
-    )
-
-
-def pack_rank_blocks(ranks: DataFrame, value_col: str, num_blocks: int) -> DataFrame:
-    """ranks(id, <value_col>) → per-partition sorted (ids, vals) buffers."""
-    r = ranks.select(
-        F.col("id"),
-        F.col(value_col).cast("double").alias("val"),
-        F.pmod(F.col("id"), F.lit(num_blocks)).cast("int").alias("part"),
-    )
-    return r.groupBy("part").applyInPandas(_pack_rank_block, schema=RANK_BLOCK_SCHEMA)
-
-
-def scatter_partials(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """The scatter half of a push superstep: per-block bincount against
-    the page-cache-resident CSR (map-side combine) → (dst, partial) rows,
-    at most one per (block, target)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                blk = _load_part(block_path, int(row.part), _PUSH_ARRAYS)
-                if blk is None or len(blk["src_ids"]) == 0:
-                    continue
-                ids = np.frombuffer(row.ids, np.int64)
-                vals = np.frombuffer(row.vals, np.float64)
-                src_ids = np.asarray(blk["src_ids"])
-                pos = np.searchsorted(ids, src_ids)
-                ok = (pos < len(ids)) & (
-                    ids[np.minimum(pos, len(ids) - 1)] == src_ids
-                )
-                r_src = np.where(ok, vals[np.minimum(pos, len(ids) - 1)], 0.0)
-                # reuse the per-edge buffer across supersteps: fresh ~8B/edge
-                # anonymous allocations each superstep cost hundreds of ms of
-                # page faults on large blocks (measured on the 403M-edge bench)
-                key = ("pe", block_path, int(row.part))
-                buf = _MMAP_CACHE.get(key)
-                if buf is None or len(buf) != len(blk["w_norm"]):
-                    buf = np.empty(len(blk["w_norm"]))
-                    _MMAP_CACHE[key] = buf
-                np.multiply(
-                    np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
-                )
-                partial = np.bincount(
-                    blk["dst_code"], weights=buf, minlength=len(blk["dst_uniq"])
-                )
-                yield pd.DataFrame({"dst": np.asarray(blk["dst_uniq"]), "partial": partial})
-
-    return rank_blocks.mapInPandas(run, schema="dst long, partial double")
-
-
-def scatter_partials_combined(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """Scatter with task-level map-side combine (r6, fused-loop variant):
-    each task's per-block partial vectors are merged (concat → sort →
-    reduceat) BEFORE they cross the Arrow boundary, so the downstream
-    repartition carries ≈ distinct-targets-per-task rows instead of one
-    row per (block, target) — the JVM groupBy's partial aggregation did
-    this for the unfused loop; the fused loop has to do it in-kernel.
-    Pair with a volume-sized coalesce of the rank blocks so tasks hold
-    several blocks' worth of real numpy work."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ds, ps = [], []
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                blk = _load_part(block_path, int(row.part), _PUSH_ARRAYS)
-                if blk is None or len(blk["src_ids"]) == 0:
-                    continue
-                ids = np.frombuffer(row.ids, np.int64)
-                vals = np.frombuffer(row.vals, np.float64)
-                src_ids = np.asarray(blk["src_ids"])
-                pos = np.searchsorted(ids, src_ids)
-                ok = (pos < len(ids)) & (ids[np.minimum(pos, len(ids) - 1)] == src_ids)
-                r_src = np.where(ok, vals[np.minimum(pos, len(ids) - 1)], 0.0)
-                key = ("pe", block_path, int(row.part))
-                buf = _MMAP_CACHE.get(key)
-                if buf is None or len(buf) != len(blk["w_norm"]):
-                    buf = np.empty(len(blk["w_norm"]))
-                    _MMAP_CACHE[key] = buf
-                np.multiply(
-                    np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
-                )
-                ds.append(np.asarray(blk["dst_uniq"]))
-                ps.append(
-                    np.bincount(
-                        blk["dst_code"], weights=buf, minlength=len(blk["dst_uniq"])
-                    )
-                )
-        if ds:
-            d_ = np.concatenate(ds)
-            p_ = np.concatenate(ps)
-            o = np.argsort(d_, kind="stable")
-            d_, p_ = d_[o], p_[o]
-            u, idx = np.unique(d_, return_index=True)
-            yield pd.DataFrame({"dst": u, "partial": np.add.reduceat(p_, idx)})
-
-    return rank_blocks.mapInPandas(run, schema="dst long, partial double")
-
-
-def scatter_gather(rank_blocks: DataFrame, block_path: str) -> DataFrame:
-    """One push superstep: (dst, contrib = Σ rank(u)·w_norm(u,v)).
-
-    Scatter (above) → global ``groupBy(dst).agg(sum)`` gather shuffle.
-    """
-    partials = scatter_partials(rank_blocks, block_path)
-    return partials.groupBy("dst").agg(F.sum("partial").alias("contrib"))
-
-
-def gather_pack(
-    partials: DataFrame, num_blocks: int, damping: float, source_nodes=None
+def push_superstep(
+    ranks: DataFrame,
+    block_path: str,
+    num_blocks: int,
+    damping: float,
+    source_nodes=None,
 ) -> DataFrame:
-    """Fused gather + rank update + block pack (r6): ONE exchange per
-    superstep instead of three. The partials stream (scatter output plus
-    one injected zero row per no-in-edge node) is repartitioned by
-    ``pmod(dst, num_blocks)`` and each task sums per target, applies
-    (1−d)·t + d·contrib (the teleport is row-local — unpersonalized 1.0
-    or an isin over the seed list), and emits the next superstep's packed
-    rank block directly — the old loop paid a gather groupBy, a nodes
-    left-join, and the pack groupBy as three separate exchanges. Per-task
-    state is the partition's distinct targets (≈ n/num_blocks ids), the
+    """One push superstep, ONE exchange: state (id, rank) → (id, rank, diff).
+
+    Scatter (``mapInPandas``): each task groups its state rows by
+    ``pmod(id, B)``, pushes each group through the matching CSR block (one
+    bincount — map-side combine), and merges the task's partial vectors
+    before they cross the Arrow boundary. Beside the partials it emits one
+    ``(dst=id, partial=0, prev=rank)`` row per state row, so every node —
+    with or without in-edges — reaches the gather with its old rank.
+    Scatter is linear: a part whose rows are split across tasks stays
+    exact, it only costs another block pass.
+
+    Gather: ``repartition(B, pmod(dst, B))`` → per task, sum per target and
+    apply (1−d)·t + d·contrib, with the teleport t row-local (1.0, or an
+    isin over the seed list); ``diff`` = |rank − prev| feeds the caller's
+    max-|Δ| observation (0 for a target that had no state row). The output
+    keeps the state partitioned by ``pmod(id, B)`` for the next scatter.
+    Per-task state is the partition's distinct targets (≈ n/B ids), the
     same bound as a CSC block."""
     seeds = (
         np.array(sorted(int(s) for s in source_nodes), dtype=np.int64)
@@ -525,51 +425,71 @@ def gather_pack(
     )
     d = float(damping)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, list] = {}
-        for pdf in batches:
-            dst = pdf["dst"].to_numpy(np.int64)
-            val = pdf["partial"].to_numpy(np.float64)
-            parts = np.mod(dst, num_blocks)
-            for part in np.unique(parts):
-                m = parts == part
-                d_, p_ = dst[m], val[m]
-                o = np.argsort(d_, kind="stable")
-                d_, p_ = d_[o], p_[o]
-                u, idx = np.unique(d_, return_index=True)
-                acc.setdefault(int(part), []).append((u, np.add.reduceat(p_, idx)))
-        for part, chunks in acc.items():
-            d_ = np.concatenate([c[0] for c in chunks])
-            s_ = np.concatenate([c[1] for c in chunks])
-            o = np.argsort(d_, kind="stable")
-            d_, s_ = d_[o], s_[o]
-            u, idx = np.unique(d_, return_index=True)
-            contrib = np.add.reduceat(s_, idx)
-            t = 1.0 if seeds is None else np.isin(u, seeds).astype(np.float64)
-            vals = (1.0 - d) * t + d * contrib
+    def scatter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        ids = pdf["id"].to_numpy(np.int64)
+        vals = pdf["rank"].to_numpy(np.float64)
+        yield pd.DataFrame({"dst": ids, "partial": 0.0, "prev": vals})
+        parts = np.mod(ids, num_blocks)
+        o = np.lexsort((ids, parts))
+        ids, vals, parts = ids[o], vals[o], parts[o]
+        cuts = np.flatnonzero(np.diff(parts)) + 1
+        ds, ps = [], []
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(ids)]):
+            part = int(parts[lo])
+            blk = _load_part(block_path, part, _PUSH_ARRAYS)
+            if blk is None or len(blk["src_ids"]) == 0:
+                continue
+            p_ids, p_vals = ids[lo:hi], vals[lo:hi]
+            src_ids = np.asarray(blk["src_ids"])
+            pos = np.minimum(np.searchsorted(p_ids, src_ids), len(p_ids) - 1)
+            r_src = np.where(p_ids[pos] == src_ids, p_vals[pos], 0.0)
+            # reuse the per-edge buffer across supersteps: fresh ~8B/edge
+            # anonymous allocations each superstep cost hundreds of ms of
+            # page faults on large blocks (measured on the 403M-edge bench)
+            key = ("pe", block_path, part)
+            buf = _MMAP_CACHE.get(key)
+            if buf is None or len(buf) != len(blk["w_norm"]):
+                buf = np.empty(len(blk["w_norm"]))
+                _MMAP_CACHE[key] = buf
+            np.multiply(
+                np.repeat(r_src, np.diff(blk["indptr"])), blk["w_norm"], out=buf
+            )
+            ds.append(np.asarray(blk["dst_uniq"]))
+            ps.append(
+                np.bincount(blk["dst_code"], weights=buf, minlength=len(blk["dst_uniq"]))
+            )
+        if ds:
+            dst, partial = np.concatenate(ds), np.concatenate(ps)
+            o = np.argsort(dst, kind="stable")
+            u, idx = np.unique(dst[o], return_index=True)
             yield pd.DataFrame(
-                {"part": [int(part)], "ids": [u.tobytes()], "vals": [vals.tobytes()]}
+                {"dst": u, "partial": np.add.reduceat(partial[o], idx), "prev": np.nan}
             )
 
+    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        dst = pdf["dst"].to_numpy(np.int64)
+        o = np.argsort(dst, kind="stable")
+        u, idx = np.unique(dst[o], return_index=True)
+        contrib = np.add.reduceat(pdf["partial"].to_numpy(np.float64)[o], idx)
+        # fmax skips the NaN prev of partial rows: one state row per id
+        prev = np.fmax.reduceat(pdf["prev"].to_numpy(np.float64)[o], idx)
+        t = 1.0 if seeds is None else np.isin(u, seeds).astype(np.float64)
+        rank = (1.0 - d) * t + d * contrib
+        diff = np.where(np.isnan(prev), 0.0, np.abs(rank - prev))
+        yield pd.DataFrame({"id": u, "rank": rank, "diff": diff})
+
+    partials = ranks.mapInPandas(scatter, schema="dst long, partial double, prev double")
     return partials.repartition(
         num_blocks, F.pmod(F.col("dst"), F.lit(num_blocks))
-    ).mapInPandas(run, schema=RANK_BLOCK_SCHEMA)
-
-
-def unpack_rank_blocks(rank_blocks: DataFrame) -> DataFrame:
-    """(part, ids, vals) packed blocks → (id, rank) rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                yield pd.DataFrame(
-                    {
-                        "id": np.frombuffer(row.ids, np.int64),
-                        "rank": np.frombuffer(row.vals, np.float64),
-                    }
-                )
-
-    return rank_blocks.mapInPandas(run, schema="id long, rank double")
+    ).mapInPandas(gather, schema="id long, rank double, diff double")
 
 
 # ---------------------------------------------------------------- pull (CSC)
@@ -656,7 +576,7 @@ def pull_superstep(
         slice_len = max(0, (n - part + num_blocks - 1) // num_blocks)
         if blk is None:
             return part, np.zeros(slice_len).tobytes()
-        # per-edge buffer reuse (see scatter_gather): avoids ~8B/edge of
+        # per-edge buffer reuse (see push_superstep): avoids ~8B/edge of
         # fresh anonymous pages + faults every superstep
         key = ("pe", block_path, part)
         buf = _MMAP_CACHE.get(key)

@@ -18,9 +18,13 @@ BSP float[] buffers:
   rank vector, zero shuffle) when node ids are contiguous and the vector
   fits a memory-aware driver budget, else ``csr``.
 * ``strategy='csr'``: per-partition CSR blocks inside Arrow UDFs
-  (blocks.py) — scatter is one numpy bincount per block (map-side combine),
-  gather is ``groupBy(dst).agg(sum)``; at most B partial rows per target
-  regardless of in-degree, so hot nodes cannot skew the shuffle.
+  (blocks.py) — one exchange per superstep: the scatter pushes each task's
+  (id, rank) rows through their blocks (numpy bincount, map-side combine)
+  and the gather, after one ``repartition(pmod(dst, B))``, sums per target
+  and applies the update; max |Δ| is observed on that same job and the
+  checkpoint writes the (id, rank) state as is. At most one partial row
+  per (task, target) regardless of in-degree, so hot nodes cannot skew the
+  shuffle.
 * ``strategy='join'``: pure DataFrame — ranks ⋈ edges → salted two-stage
   ``groupBy(dst).agg(sum)``; Catalyst/AQE pick the join; ``salt`` > 0
   spreads hot targets across salt buckets before the final combine.
@@ -36,7 +40,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from linkgraph.algorithms import blocks
 from linkgraph.graph import Graph
@@ -260,32 +264,43 @@ class PageRank:
             # — a reused instance must re-resolve for each new graph):
             # pull = CSC blocks + one broadcast rank vector, ZERO shuffle
             # per superstep — the fast path whenever ids are contiguous and
-            # the vector fits DRIVER memory (memory-aware cap); csr = push
-            # scatter + groupBy(dst).sum gather beyond that.
+            # the vector fits DRIVER memory (memory-aware cap); csr = fused
+            # push scatter + one-exchange gather beyond that.
             n = _contiguous_n(graph.nodes.select("id"))
             cap = self._pull_node_cap(graph.nodes.sparkSession)
             strategy = "pull" if n is not None and n <= cap else "csr"
         self.resolved_strategy = strategy
-        if strategy == "pull":
-            t0 = time.time()
-            out = self._run_pull(graph)
-            self.metrics.compute_millis = int((time.time() - t0) * 1000)
-            out.iterations = self.metrics.iterations
-            out.did_converge = self.metrics.did_converge
-            return out
         t0 = time.time()
-        d = self.damping
-        nodes = self._teleport(graph.nodes).persist()
-        edges = graph.edges
-        start_step = 0
+        if strategy == "pull":
+            out = self._run_pull(graph)
+        else:
+            out = self._run_shuffle(graph, strategy)
+        self.metrics.compute_millis = int((time.time() - t0) * 1000)
+        out.iterations = self.metrics.iterations
+        out.did_converge = self.metrics.did_converge
+        return out
 
-        denom = None
-        block_path = None
-        owns_blocks = False
-        b = self.num_blocks
+    def _run_shuffle(self, graph: Graph, strategy: str) -> DataFrame:
+        """csr / join execution: the (id, rank) state lives in Spark and each
+        superstep ends in one eager localCheckpoint — the superstep barrier
+        and lineage truncation (the reference's BSP sync point; durable
+        resume = CheckpointManager)."""
+        d = self.damping
+        nodes = self._teleport(graph.nodes)
+        edges = graph.edges
+        ranks = nodes.select("id", F.col("t").alias("rank"))
+        start_step = 0
+        if self.checkpoint is not None:
+            latest = self.checkpoint.latest(fmt="pagerank/ranks-v1")
+            if latest is not None:
+                start_step, ranks, _ = latest
+                self.metrics.resumed_from = start_step
+
         if strategy == "csr":
             # materialize the CSR block store once (worker-resident thereafter)
             block_path = self.block_store
+            owns_blocks = False
+            b = self.num_blocks
             if block_path is None:
                 key = blocks.semantic_store_key(edges, "pr-csr", self.weighted)
                 block_path, _hit = blocks.cached_store_dir(
@@ -306,127 +321,70 @@ class PageRank:
                     block_path,
                     weighted=self.weighted,
                 )
+            blocks.pin_store(block_path)  # see pull strategy: guards LRU eviction
+            n_tasks = blocks._pull_task_count(block_path, b)
+            # partitioned by block once; every gather keeps that partitioning
+            ranks = ranks.repartition(b, F.pmod(F.col("id"), F.lit(b)))
         else:
             denom = self._denominator(edges).persist()
-
-        ranks = nodes.select("id", F.col("t").alias("rank"))
-        if self.checkpoint is not None:
-            latest = self.checkpoint.latest(fmt="pagerank/ranks-v1")
-            if latest is not None:
-                start_step, ranks, m = latest
-                self.metrics.resumed_from = start_step
-        ranks = ranks.localCheckpoint(eager=True)
-
-        # r6: nodes with NO in-edges have the constant rank (1−d)·t every
-        # superstep, so the per-superstep nodes ⟕ contribs shuffle join is
-        # replaced by contribs-side arithmetic + a UNION with this static
-        # slice (computed once) — one exchange fewer per superstep, same
-        # values. The teleport is a row-local expression of id, so contrib
-        # rows never need a join to fetch t.
-        if self.source_nodes is None:
-            def t_of(c):
-                return F.lit(1.0)
-        else:
-            srcs = [int(s) for s in self.source_nodes]
-
-            def t_of(c):
-                return F.when(c.isin(srcs), 1.0).otherwise(0.0)
-        static_ranks = (
-            nodes.join(
-                edges.select(F.col("dst").alias("id")).distinct(), "id", "left_anti"
+            # nodes with NO in-edges have the constant rank (1−d)·t every
+            # superstep: computed once and unioned in, so contrib rows need no
+            # nodes join; the teleport is a row-local expression of id
+            static_ranks = (
+                nodes.join(
+                    edges.select(F.col("dst").alias("id")).distinct(), "id", "left_anti"
+                )
+                .select("id", ((1.0 - d) * F.col("t")).alias("rank"))
+                .localCheckpoint()
             )
-            .select("id", ((1.0 - d) * F.col("t")).alias("rank"))
-            # lazy: the fused csr loop below never reads this; the
-            # tolerance/resume loop materializes it in its first superstep
-            .localCheckpoint(eager=False)
-        )
+            if self.source_nodes is None:
+                t_dst = F.lit(1.0)
+            else:
+                srcs = [int(s) for s in self.source_nodes]
+                t_dst = F.when(F.col("dst").isin(srcs), 1.0).otherwise(0.0)
+        ranks = ranks.localCheckpoint(eager=True)
 
         converged = False
         step = start_step
-        if block_path is not None:
-            blocks.pin_store(block_path)  # see pull strategy: guards LRU eviction
-
-        # r6 fused csr loop (no tolerance/resume bookkeeping needed): one
-        # exchange per superstep — scatter partials + injected zero rows
-        # for no-in-edge nodes → repartition(pmod(dst, b)) → fused
-        # gather/update/pack emits the NEXT superstep's rank blocks
-        # directly. The tolerance / checkpoint-resume loop below keeps the
-        # unpacked (id, rank) table per superstep and is unchanged.
-        if (
-            strategy == "csr"
-            and self.tolerance is None
-            and self.checkpoint is None
-        ):
-            static_zero = (
-                nodes.join(
-                    edges.select(F.col("dst").alias("id")).distinct(),
-                    "id",
-                    "left_anti",
-                )
-                .select(F.col("id").alias("dst"), F.lit(0.0).alias("partial"))
-                .localCheckpoint(eager=True)
-            )
-            rank_blocks = blocks.pack_rank_blocks(ranks, "rank", b).localCheckpoint(
-                eager=True
-            )
-            n_tasks = blocks._pull_task_count(block_path, b)
-            while step < self.max_iterations:
-                it0 = time.time()
-                partials = blocks.scatter_partials_combined(
-                    rank_blocks.coalesce(n_tasks), block_path
-                ).unionByName(static_zero)
-                rank_blocks = blocks.gather_pack(
-                    partials, b, d, self.source_nodes
-                ).localCheckpoint(eager=True)
-                step += 1
-                self.metrics.superstep_millis.append(int((time.time() - it0) * 1000))
-            ranks = blocks.unpack_rank_blocks(rank_blocks)
-            self.metrics.iterations = step
-            self.metrics.did_converge = False
-            self.metrics.compute_millis = int((time.time() - t0) * 1000)
-            blocks.unpin_store(block_path)
-            if owns_blocks and block_path:
-                import shutil
-
-                shutil.rmtree(block_path, ignore_errors=True)
-            nodes.unpersist()
-            ranks.iterations = self.metrics.iterations
-            ranks.did_converge = self.metrics.did_converge
-            return ranks
-
         while step < self.max_iterations:
             it0 = time.time()
             if strategy == "csr":
-                rank_blocks = blocks.pack_rank_blocks(ranks, "rank", b)
-                contribs = blocks.scatter_gather(rank_blocks, block_path)
-            else:
-                contribs = self._contribs_join(edges, ranks, denom)
-            # eager localCheckpoint = superstep barrier + lineage truncation
-            # (the reference's BSP sync point; durable resume = CheckpointManager)
-            new_ranks = (
-                contribs.select(
-                    F.col("dst").alias("id"),
-                    ((1.0 - d) * t_of(F.col("dst")) + d * F.col("contrib")).alias(
-                        "rank"
-                    ),
+                # max |Δ| is observed on the materializing job itself
+                obs = Observation()
+                new_ranks = (
+                    blocks.push_superstep(
+                        ranks.coalesce(n_tasks), block_path, b, d, self.source_nodes
+                    )
+                    .observe(obs, F.max("diff").alias("delta"))
+                    .localCheckpoint(eager=True)
+                    .select("id", "rank")
                 )
-                .unionByName(static_ranks)
-                .localCheckpoint(eager=True)
-            )
+                delta = obs.get["delta"] or 0.0
+            else:
+                new_ranks = (
+                    self._contribs_join(edges, ranks, denom)
+                    .select(
+                        F.col("dst").alias("id"),
+                        ((1.0 - d) * t_dst + d * F.col("contrib")).alias("rank"),
+                    )
+                    .unionByName(static_ranks)
+                    .localCheckpoint(eager=True)
+                )
+                delta = None
+                if self.tolerance is not None:
+                    delta = (
+                        new_ranks.alias("n")
+                        .join(ranks.alias("o"), "id")
+                        .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("m"))
+                        .first()["m"]
+                    ) or 0.0
             step += 1
-            delta = None
-            if self.tolerance is not None:
-                delta = (
-                    new_ranks.alias("n")
-                    .join(ranks.alias("o"), "id")
-                    .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("m"))
-                    .first()["m"]
-                ) or 0.0
+            if delta is not None:
                 self.metrics.deltas.append(float(delta))
             if self.checkpoint is not None and (
                 self.checkpoint_every and step % self.checkpoint_every == 0
             ):
-                new_ranks = self.checkpoint.write(
+                self.checkpoint.write(
                     new_ranks, step, {"delta": delta, "iteration": step},
                     fmt="pagerank/ranks-v1",
                 )
@@ -439,18 +397,14 @@ class PageRank:
 
         self.metrics.iterations = step
         self.metrics.did_converge = converged
-        self.metrics.compute_millis = int((time.time() - t0) * 1000)
-        if block_path is not None:
+        if strategy == "csr":
             blocks.unpin_store(block_path)
-        if owns_blocks and block_path:
-            import shutil
+            if owns_blocks:
+                import shutil
 
-            shutil.rmtree(block_path, ignore_errors=True)
-        if denom is not None:
+                shutil.rmtree(block_path, ignore_errors=True)
+        else:
             denom.unpersist()
-        nodes.unpersist()
-        ranks.iterations = self.metrics.iterations
-        ranks.did_converge = self.metrics.did_converge
         return ranks
 
 

@@ -65,7 +65,9 @@ class CheckpointManager:
         fails loudly instead of silently misinterpreting rows."""
         path = os.path.join(self.dir, f"step={step}")
         df.write.mode("overwrite").parquet(path)
-        reread = self.spark.read.parquet(path)
+        # the written schema is known: re-reading with it skips the
+        # schema-inference job a bare read.parquet runs
+        reread = self.spark.read.schema(df.schema).parquet(path)
         # per-partition lineage: rows + a value checksum per output file
         part_stats = [
             {"rows": r["rows"], "checksum": r["checksum"]}

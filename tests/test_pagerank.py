@@ -116,19 +116,78 @@ def test_pagerank_partition_invariance(spark, reparts, blocks):
         assert got[i] == pytest.approx(golden[i], abs=1e-9)
 
 
-def test_pagerank_checkpoint_resume(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["join", "csr"])
+def test_pagerank_checkpoint_resume(spark, tmp_path, strategy):
     from linkgraph.io import CheckpointManager
 
     g = _graph(spark)
     full = {r["id"]: r["rank"] for r in
-            PageRank(strategy="join", max_iterations=10).run(g).collect()}
+            PageRank(strategy=strategy, max_iterations=10).run(g).collect()}
     ck = CheckpointManager(spark, str(tmp_path / "ck"))
-    PageRank(strategy="join", max_iterations=4, checkpoint=ck, checkpoint_every=1).run(g).collect()
-    pr2 = PageRank(strategy="join", max_iterations=10, checkpoint=ck, checkpoint_every=1)
+    PageRank(strategy=strategy, max_iterations=4, checkpoint=ck,
+             checkpoint_every=1).run(g).collect()
+    pr2 = PageRank(strategy=strategy, max_iterations=10, checkpoint=ck, checkpoint_every=1)
     resumed = {r["id"]: r["rank"] for r in pr2.run(g).collect()}
     assert pr2.metrics.resumed_from == 4
+    assert set(resumed) == set(range(N))
     for i in range(N):
         assert resumed[i] == pytest.approx(full[i], abs=1e-12)
+
+
+def _graph_with_isolated(spark):
+    """G_PR plus node N, which has no edges at all."""
+    return Graph.from_edges(
+        edges_df(spark, _edges()),
+        nodes=spark.createDataFrame([(i,) for i in range(N + 1)], "id long"),
+    )
+
+
+def test_csr_keeps_isolated_node(spark):
+    g = _graph_with_isolated(spark)
+    got = {r["id"]: r["rank"] for r in
+           PageRank(strategy="csr", max_iterations=10).run(g).collect()}
+    assert set(got) == set(range(N + 1))
+    assert got[N] == pytest.approx(1 - 0.85, abs=1e-12)
+
+
+def test_csr_tolerance_stops_with_pull(spark):
+    g = _graph_with_isolated(spark)
+    csr = PageRank(strategy="csr", tolerance=1e-4, max_iterations=100)
+    pull = PageRank(strategy="pull", tolerance=1e-4, max_iterations=100)
+    a = {r["id"]: r["rank"] for r in csr.run(g).collect()}
+    b = {r["id"]: r["rank"] for r in pull.run(g).collect()}
+    assert csr.metrics.did_converge and pull.metrics.did_converge
+    assert csr.metrics.iterations == pull.metrics.iterations
+    assert csr.metrics.deltas == pytest.approx(pull.metrics.deltas, abs=1e-9)
+    assert set(a) == set(b)
+    for k in a:
+        assert a[k] == pytest.approx(b[k], abs=1e-9)
+
+
+def test_csr_spark_jobs_per_superstep(spark, tmp_path):
+    """Regression guard on the fused csr superstep: a run with a tolerance
+    (and no checkpoint) costs 2 Spark jobs per superstep — the gather
+    exchange's map stage and the materializing localCheckpoint, which also
+    observes max |Δ|. A delta join or a separate pack exchange would add
+    jobs. Counted from the difference of two runs, so set-up cancels."""
+    sc = spark.sparkContext
+    g = _graph(spark)
+    store = str(tmp_path / "store")
+    PageRank(strategy="csr", max_iterations=1, block_store=store).run(g)
+
+    def jobs(group, iterations):
+        sc.setJobGroup(group, group)
+        try:
+            pr = PageRank(strategy="csr", tolerance=1e-12, max_iterations=iterations,
+                          block_store=store)
+            pr.run(g).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert pr.metrics.iterations == iterations and not pr.metrics.did_converge
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    per_step = (jobs("pr-csr-5", 5) - jobs("pr-csr-2", 2)) / 3
+    assert per_step <= 2
 
 
 def test_article_rank_matches_oracle(spark):

@@ -127,6 +127,46 @@ def test_store_key_changes_when_parquet_mutates(spark, tmp_path):
     assert k2 is not None and k2 != k1
 
 
+def test_store_rebuilt_when_parquet_rewritten_in_place(spark, tmp_path):
+    # rewriting the SAME file name (not Spark's fresh part-file names) must
+    # still change the store key, so the csr run rebuilds its blocks
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from linkgraph.algorithms.pagerank import PageRank
+
+    from oracles import np_pagerank
+
+    d = tmp_path / "edges"
+    d.mkdir()
+    n = 6
+
+    def write(dsts):
+        pq.write_table(
+            pa.table({"src": list(range(n)), "dst": dsts, "weight": [1.0] * n}),
+            str(d / "part-0.parquet"),
+        )
+
+    def ranks():
+        g = Graph.from_edges(spark.read.parquet(str(d)))
+        return {r["id"]: r["rank"] for r in
+                PageRank(strategy="csr", max_iterations=10).run(g).collect()}
+
+    cycle = [(i + 1) % n for i in range(n)]
+    star = [1] + [0] * (n - 1)
+    write(cycle)
+    before = ranks()
+    time.sleep(0.05)  # a distinct mtime even on coarse filesystems
+    write(star)
+    after = ranks()
+    for dsts, got in ((cycle, before), (star, after)):
+        golden = np_pagerank([(i, t, 1.0) for i, t in enumerate(dsts)], n, iters=10)
+        for i in range(n):
+            assert got[i] == pytest.approx(golden[i], abs=1e-9)
+
+
 def test_scc_distributed_matches_local(spark, small_graph, monkeypatch):
     from linkgraph.algorithms.scc import scc
 
